@@ -23,8 +23,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ertransfer_spark.functions.text import normalize, qgrams, tokens
+
+
+def long_id(df: DataFrame, id_col: str, op: str):
+    """``id_col`` cast to long, for operators that key on 64-bit ids.
+
+    Raises TypeError unless the column is an integral type: a cast of a
+    string id to long is null for any non-numeric id, so the operator
+    would silently return zero rows. Checked on the schema (no job); hash
+    string ids first, e.g. ``F.xxhash64("conv_id")``."""
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(
+            f"{op}: id column {id_col!r} is {dtype.simpleString()}, not an "
+            f"integral type; pass integral ids (e.g. xxhash64({id_col}))"
+        )
+    return F.col(id_col).cast("long")
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -122,7 +139,7 @@ def shingle_jaccard_pairs(
     WITNESS an overlap — same contract as :func:`ngram_jaccard_dedup`).
 
     Two kernels, chosen at runtime from the df-capped gram-dictionary size
-    (one O(1)-row driver probe):
+    (one driver collect of at most ``dense_dict_max`` + 1 dictionary rows):
 
     - **sparse** (the web-scale default): xxhash64 posting keys, hot grams
       (df > ``max_gram_df``) removed by a broadcast ANTI-join — the hot set
@@ -150,7 +167,7 @@ def shingle_jaccard_pairs(
     import pandas as pd
 
     h = docs.select(
-        F.col(id_col).cast("long").alias("id"),
+        long_id(docs, id_col, "shingle_jaccard_pairs").alias("id"),
         F.expr(f"transform({gram_col}, x -> xxhash64(x))").alias("hs"),
         F.col(sz_col).cast("int").alias("sz"),
     )
@@ -159,7 +176,13 @@ def shingle_jaccard_pairs(
     # probe and the hot-set reuse it instead of recomputing the postings agg
     dfreq = posts.groupBy("g").agg(F.count(F.lit(1)).alias("df")).localCheckpoint()
     hot = dfreq.filter(F.col("df") > max_gram_df).select("g")
-    n_kept = dfreq.filter(F.col("df") <= max_gram_df).count()
+    # one bounded collect is both the dictionary-size probe and, when the
+    # dictionary is small enough for the dense kernel, the dictionary
+    kept = (
+        dfreq.filter(F.col("df") <= max_gram_df).select("g")
+        .limit(dense_dict_max + 1).collect()
+    )
+    n_kept = len(kept)
 
     sim_of = lambda ov, asz, bsz: F.round(ov / (asz + bsz - ov), 6)  # noqa: E731
 
@@ -170,10 +193,7 @@ def shingle_jaccard_pairs(
         # prepped (id, hs, sz) rows instead of the explode → anti-join →
         # collect_list round trip (two corpus passes saved; BENCH.md
         # 2026-08-21 decomposition).
-        keep_arr = np.sort(np.asarray(
-            [r["g"] for r in dfreq.filter(F.col("df") <= max_gram_df).select("g").collect()],
-            dtype=np.int64,
-        ))
+        keep_arr = np.sort(np.asarray([r["g"] for r in kept], dtype=np.int64))
         sets = h.select("id", F.sort_array("hs").alias("gs"), "sz")
         # materialized once: feeds BOTH cogroup sides and the block count
         sets = sets.localCheckpoint()
@@ -312,7 +332,7 @@ def minhash_dedup(
         if shingle <= 1
         else word_shingles(text_col, n=shingle)
     )
-    recs = docs.select(F.col(id_col).cast("long").alias("id"), tok.alias("token_set"))
+    recs = docs.select(long_id(docs, id_col, "minhash_dedup").alias("id"), tok.alias("token_set"))
     out = minhash_lsh_join(
         recs,
         recs,

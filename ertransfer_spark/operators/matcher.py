@@ -563,11 +563,19 @@ def train_matcher_local(
     solver's inner loop moves off the cluster. The reference fits its
     classical matchers on collected train CSVs the same way
     (methods/magellan/entrypoint.py:65-78, single-node sklearn-style fit).
+
+    The fit does not depend on partition layout: when ``a_id``/``b_id``
+    are present the collected rows are sorted by them before IRLS, so
+    the floating-point sums run in one order whatever plan produced the
+    rows.
     """
     import numpy as np
 
     cols = feature_cols or FEATURES
-    pdf = featurized_train.select(*cols, label_col).toPandas()
+    ids = [c for c in ("a_id", "b_id") if c in featurized_train.columns]
+    pdf = featurized_train.select(*cols, label_col, *ids).toPandas()
+    if len(ids) == 2:
+        pdf = pdf.sort_values(ids, kind="stable")
     X = pdf[cols].to_numpy(dtype=float)
     X = np.nan_to_num(X, nan=0.0, posinf=0.0, neginf=0.0)
     y = pdf[label_col].to_numpy(dtype=float)

@@ -108,15 +108,19 @@ def brute_force_topk(
     import numpy as np
     import pandas as pd
 
+    from ertransfer_spark.operators.dedup import long_id
+
+    q_id = long_id(queries, id_col, "brute_force_topk")
+    c_id = long_id(corpus, id_col, "brute_force_topk")
     eps = 10.0 ** (-round_dp)
     pq = _n_blocks(queries, rows_per_block)
     pc = _n_blocks(corpus, rows_per_block)
 
     q = queries.select(
-        F.col(id_col).cast("long").alias("rid"), _as_double(vec_col).alias("v")
+        q_id.alias("rid"), _as_double(vec_col).alias("v")
     ).withColumn("qb", F.pmod(F.xxhash64("rid"), F.lit(pq)))
     c = corpus.select(
-        F.col(id_col).cast("long").alias("rid"), _as_double(vec_col).alias("v")
+        c_id.alias("rid"), _as_double(vec_col).alias("v")
     ).withColumn("cb", F.pmod(F.xxhash64("rid"), F.lit(pc)))
     q_rep = q.withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(pc - 1))))
     c_rep = c.withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(pq - 1))))

@@ -2,7 +2,14 @@
 Spark job graph (SURVEY §3: normalize → filtering → matching → clustering).
 
 Every stage commits a snapshot through :class:`SnapshotCatalog` and appends
-lineage rows (stage, counts, wall_ms, run_id). ``resume=True`` skips any
+lineage rows (stage, counts, wall_ms, run_id). Each stage's plan runs once,
+in its commit; the lineage numbers come from what was committed.
+``candidate_count`` is the number of rows the stage committed, read from
+the snapshot's parquet footers: records for ``records_a``/``records_b``
+(not input turns), cluster rows (one per node) for ``clusters`` (not
+matched pairs). ``candidates`` instead logs one row per token-frequency
+block, and ``labeled`` adds ``matches`` = sum(label) over its snapshot.
+``resume=True`` skips any
 stage whose snapshot is already committed — kill the driver at any stage
 boundary and rerun: only the remaining stages execute (the north-rule
 checkpoint/resume contract; reference precedent is only model-checkpoint
@@ -104,12 +111,24 @@ class ERPipeline:
         self.cfg = config or PipelineConfig()
         self.run_id = uuid.uuid4().hex[:12]
 
-    def _stage(self, name: str, fn, resume: bool):
+    def _stage(self, name: str, build, resume: bool, lineage=None):
+        """Commit ``build()`` as table ``name`` (skipped under ``resume``
+        when already committed) and return the committed snapshot.
+
+        The stage's plan runs exactly once, in the commit. Lineage is
+        taken from what was committed: ``candidate_count`` is the
+        snapshot's row count from its parquet footers (no Spark job).
+        ``lineage(snapshot)``, when given, returns the stage's own lineage
+        rows instead."""
         if resume and self.catalog.exists(name):
             return self.catalog.read(name)
         t0 = time.time()
-        df, extra_lineage = fn()
-        self.catalog.commit(name, df, meta={"run_id": self.run_id})
+        self.catalog.commit(name, build(), meta={"run_id": self.run_id})
+        snap = self.catalog.read(name)
+        if lineage is None:
+            extra_lineage = [{"candidate_count": self.catalog.num_rows(name)}]
+        else:
+            extra_lineage = lineage(snap)
         wall_ms = int((time.time() - t0) * 1000)
         rows = [
             {
@@ -121,10 +140,10 @@ class ERPipeline:
                 "comparisons": int(r.get("comparisons", 0)),
                 "matches": int(r.get("matches", 0)),
             }
-            for r in (extra_lineage or [{}])
+            for r in extra_lineage
         ]
         self.catalog.append_lineage(rows)
-        return self.catalog.read(name)
+        return snap
 
     def run(
         self,
@@ -150,12 +169,8 @@ class ERPipeline:
             raise ValueError("cfg.attrs requires run(raw_a=, raw_b=)")
         rec_resume = resume if resume_records is None else resume_records
 
-        ra = self._stage(
-            "records_a", lambda: (canonicalize(transcripts_a), [{"candidate_count": transcripts_a.count()}]), rec_resume
-        )
-        rb = self._stage(
-            "records_b", lambda: (canonicalize(transcripts_b), [{"candidate_count": transcripts_b.count()}]), rec_resume
-        )
+        ra = self._stage("records_a", lambda: canonicalize(transcripts_a), rec_resume)
+        rb = self._stage("records_b", lambda: canonicalize(transcripts_b), rec_resume)
 
         def _block():
             if cfg.blocker == "vector":
@@ -184,38 +199,40 @@ class ERPipeline:
                     posting_budget=cfg.posting_budget,
                     min_sim=cfg.min_sim,
                 )
+            return cand
+
+        def _block_lineage(_cand):
             # per-block lineage from the token-frequency histogram
-            hist = block_histogram(ra, tokens_col=cfg.tokens_col).collect()
-            lineage = [
+            return [
                 {
                     "block_key": f"df<={r['df_bucket']}",
                     "candidate_count": int(r["n_tokens"]),
                     "comparisons": int(r["comparisons"]),
                 }
-                for r in hist
-            ]
-            return cand, lineage
+                for r in block_histogram(ra, tokens_col=cfg.tokens_col).collect()
+            ] or [{}]
 
-        cand = self._stage("candidates", _block, resume)
+        cand = self._stage("candidates", _block, resume, _block_lineage)
 
         golden = None
         if golden_matches is not None:
             golden = referential_filter(golden_matches, ra, rb)
 
-        def _label():
-            labeled = attach_labels(cand, golden)
-            # one agg job for both lineage numbers (was count + sum = 2)
-            row = labeled.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("label").alias("m")
-            ).collect()[0]
-            return labeled, [{"candidate_count": int(row["n"]), "matches": int(row["m"] or 0)}]
+        def _label_lineage(snap):
+            m = snap.agg(F.sum("label")).collect()[0][0]
+            return [{"candidate_count": self.catalog.num_rows("labeled"), "matches": int(m or 0)}]
 
-        labeled = self._stage("labeled", _label, resume) if golden is not None else cand
+        labeled = (
+            self._stage("labeled", lambda: attach_labels(cand, golden), resume, _label_lineage)
+            if golden is not None else cand
+        )
 
-        # corpus size for tfidf idf: count ONCE here — _featurize runs up to
-        # twice per pipeline (train + full featurize) and tfidf_cosine would
-        # otherwise re-run both count() jobs per invocation
-        n_docs_tfidf = (ra.count() + rb.count()) if cfg.tfidf else None
+        # corpus size for tfidf idf, from the committed records' footers —
+        # tfidf_cosine would otherwise run two count() jobs
+        n_docs_tfidf = (
+            self.catalog.num_rows("records_a") + self.catalog.num_rows("records_b")
+            if cfg.tfidf else None
+        )
 
         def _featurize(pairs_df):
             ft = featurize(attach_pair_text(pairs_df, ra, rb, truncate=256))
@@ -244,9 +261,14 @@ class ERPipeline:
             )
 
         def _predict():
+            # featurize every labeled pair ONCE: the lazy checkpoint is
+            # materialized by the first action over it (the train collect,
+            # or the unsupervised fit) and the scoring plan reads the same
+            # blocks in the commit — the pandas-UDF featurization is the
+            # matcher's dominant cost and used to run twice
+            all_ft = _featurize(labeled).localCheckpoint(eager=False)
             if golden is not None and cfg.algorithm != "unsupervised":
-                splits = stratified_split(labeled, cfg.split_weights, cfg.seed)
-                train_pairs = splits["train"]
+                train_ft = stratified_split(all_ft, cfg.split_weights, cfg.seed)["train"]
                 if (cfg.algorithm == "logreg" and cfg.local_train
                         and not cfg.train_params):
                     from ertransfer_spark.operators.matcher import (
@@ -260,26 +282,31 @@ class ERPipeline:
                     # and degenerate the IRLS boundary — so the driver
                     # collect is bounded by n_positives + ~cap (ceil keeps
                     # the negative sample <= cap; floor allowed up to 2x).
-                    n_train = train_pairs.count()
-                    keep = max(1, -(-n_train // cfg.train_sample_cap))
+                    # The train split is a subset of labeled, so its count
+                    # (one scan of the labeled snapshot) is skipped when the
+                    # snapshot's footer count already fits the cap.
+                    keep = 1
+                    if self.catalog.num_rows("labeled") > cfg.train_sample_cap:
+                        n_train = stratified_split(
+                            labeled, cfg.split_weights, cfg.seed
+                        )["train"].count()
+                        keep = max(1, -(-n_train // cfg.train_sample_cap))
                     if keep > 1:
-                        train_pairs = train_pairs.filter(
+                        train_ft = train_ft.filter(
                             (F.col("label") == 1)
                             | (F.pmod(
                                 F.xxhash64("a_id", "b_id", F.lit(999)),
                                 F.lit(keep),
                             ) == 0)
                         )
-                    model = train_matcher_local(
-                        _featurize(train_pairs), feature_cols=feature_cols
-                    )
+                    model = train_matcher_local(train_ft, feature_cols=feature_cols)
                 else:
                     model = train_matcher(
-                        _featurize(train_pairs), algorithm=cfg.algorithm,
+                        train_ft, algorithm=cfg.algorithm,
                         seed=cfg.seed, feature_cols=feature_cols,
                         params=cfg.train_params,
                     )
-                preds = score(model, _featurize(labeled))
+                preds = score(model, all_ft)
             else:
                 # no labels (or algorithm="unsupervised"): ZeroER-style GMM
                 # over the similarity features — the reference paper's
@@ -289,10 +316,9 @@ class ERPipeline:
                     train_unsupervised,
                 )
 
-                all_ft = _featurize(labeled)
                 um = train_unsupervised(all_ft, seed=cfg.seed, feature_cols=feature_cols)
                 preds = score_unsupervised(um, all_ft)
-            return preds, [{"candidate_count": preds.count()}]
+            return preds
 
         preds = self._stage("predictions", _predict, resume)
 
@@ -306,14 +332,10 @@ class ERPipeline:
                 pairs = unique_mapping_clusters(preds, threshold=t)
             else:
                 pairs = exact_clusters(preds, threshold=t)
-            return pairs.withColumn("threshold", F.lit(float(t))), [
-                {"candidate_count": pairs.count()}
-            ]
+            return pairs.withColumn("threshold", F.lit(float(t)))
 
         matched = self._stage("matched_pairs", _cluster, resume)
-        clusters = self._stage(
-            "clusters", lambda: (clusters_from_pairs(matched), [{"candidate_count": matched.count()}]), resume
-        )
+        clusters = self._stage("clusters", lambda: clusters_from_pairs(matched), resume)
 
         result = {"matched_pairs": matched, "clusters": clusters, "predictions": preds}
         if golden is not None:

@@ -28,6 +28,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _fsync_dir(path: Path) -> None:
@@ -158,26 +159,45 @@ class SnapshotCatalog:
         with open(snap / "_MANIFEST.json") as f:
             return json.load(f)
 
+    def _reader(self, manifests: list[dict], drop: tuple = ()):
+        """``spark.read`` carrying the table schema the manifests record, so
+        a read plans without Spark's schema-inference job (one job per
+        schemaless parquet read). Inference stays only when a manifest
+        predates schema recording or the manifests record different
+        schemas. ``drop`` names columns absent from the files read (the
+        partition columns of a pruned bucket-dir read)."""
+        recorded = {m.get("schema") for m in manifests}
+        if len(recorded) != 1 or None in recorded:
+            return self.spark.read
+        schema = StructType.fromJson(json.loads(recorded.pop()))
+        return self.spark.read.schema(
+            StructType([f for f in schema.fields if f.name not in drop])
+        )
+
     def _read_snap_data(self, snap: Path) -> DataFrame:
         """Read one snapshot exposing ONLY its data schema: hive-partition
         columns (e.g. ``_bucket``) are physical layout, not table schema —
         dropping them keeps reads stable across a re-partitioning of the
         table and lets partitioned and legacy unpartitioned snapshots union
         cleanly."""
-        df = self.spark.read.parquet(str(snap))
-        for c in self._manifest_of(snap).get("partition_by") or []:
+        m = self._manifest_of(snap)
+        df = self._reader([m]).parquet(str(snap))
+        for c in m.get("partition_by") or []:
             if c in df.columns:
                 df = df.drop(c)
         return df
 
     def read(self, table: str, snapshot: str | None = None) -> DataFrame:
+        """The table's active snapshots as one lazy DataFrame; planning it
+        runs no Spark job."""
         if snapshot is not None:
             return self._read_snap_data(self._table_dir(table) / snapshot)
         snaps = self._active_snaps(table)
         if not snaps:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        if not self._is_partitioned(snaps):
-            return self.spark.read.parquet(*[str(p) for p in snaps])
+        manifests = [self._manifest_of(p) for p in snaps]
+        if not any(m.get("partition_by") for m in manifests):
+            return self._reader(manifests).parquet(*[str(p) for p in snaps])
         # Partitioned snapshots are each their own partition-discovery root;
         # Spark refuses multiple roots in one load, so union per-snapshot
         # reads (driver cost O(snapshots); each read stays pruned/lazy).
@@ -190,12 +210,16 @@ class SnapshotCatalog:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
 
-    def _is_partitioned(self, snaps: list[Path]) -> bool:
-        for p in snaps:
-            with open(p / "_MANIFEST.json") as f:
-                if json.load(f).get("partition_by"):
-                    return True
-        return False
+    def num_rows(self, table: str) -> int:
+        """Rows in the table's active snapshots, summed from the parquet
+        footers: a driver-side metadata read, no Spark job."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(f).num_rows
+            for snap in self._active_snaps(table)
+            for f in snap.rglob("*.parquet")
+        )
 
     def bucket_dirs(self, table: str, buckets: list[int],
                     bucket_col: str = "_bucket") -> list[Path]:
@@ -240,6 +264,7 @@ class SnapshotCatalog:
         if not snaps:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
         pruned_dirs: list[Path] = []
+        pruned_manifests: list[dict] = []
         full_scans: list[DataFrame] = []
         for snap in snaps:
             m = self._manifest_of(snap)
@@ -261,11 +286,14 @@ class SnapshotCatalog:
                     d for b in buckets
                     if (d := snap / f"{bucket_col}={int(b)}").exists()
                 ]
+                pruned_manifests.append(m)
             else:
                 full_scans.append(self._read_snap_data(snap))
         parts: list[DataFrame] = []
         if pruned_dirs:
-            parts.append(self.spark.read.parquet(*[str(d) for d in pruned_dirs]))
+            # a bucket dir read directly discovers no partition column
+            reader = self._reader(pruned_manifests, drop=(bucket_col,))
+            parts.append(reader.parquet(*[str(d) for d in pruned_dirs]))
         parts += full_scans
         if not parts:
             # table exists but no requested bucket has data: empty frame

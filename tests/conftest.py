@@ -32,3 +32,25 @@ def spark_corpora(spark, corpora):
 
     ta, tb, m = corpora
     return to_spark(spark, ta), to_spark(spark, tb), spark.createDataFrame(m)
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``with count_jobs() as jobs: ...`` — runs the block under a fresh
+    Spark job group; ``jobs()`` then returns how many jobs it started."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def _count():
+        group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return _count

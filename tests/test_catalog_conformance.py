@@ -198,3 +198,23 @@ def test_read_buckets_full_scans_unknown_modulus(spark, catalog):
     json.dump(m, open(mpath, "w"))
     got = catalog.read_buckets("t", [0], n_buckets=16)
     assert got.count() == 8  # full table — superset, never a silent skip
+
+
+def test_read_runs_no_spark_job(spark, catalog, count_jobs):
+    """Reads carry the schema the manifest records, so planning a read —
+    whole table, one snapshot, an append chain, a partitioned table, a
+    bucket-pruned point read — runs no schema-inference job."""
+    catalog.commit("t", _df(spark, "v1"))
+    catalog.append("t", _df(spark, "v2"))
+    catalog.commit("b", _bdf(spark, "v1"), partition_by=["_bucket"], n_buckets=4)
+    with count_jobs() as jobs:
+        whole = catalog.read("t")
+        one = catalog.read("t", "snap-00000")
+        parts = catalog.read("b")
+        point = catalog.read_buckets("b", [0, 1, 2, 3], n_buckets=4)
+    assert jobs() == 0
+    assert sorted(r["tag"] for r in whole.collect()) == ["v1"] * 5 + ["v2"] * 5
+    assert one.count() == 5
+    assert parts.columns == point.columns == ["conv_id", "tag"]
+    assert point.count() == parts.count() == 8
+    assert catalog.num_rows("t") == 10 and catalog.num_rows("b") == 8

@@ -134,16 +134,35 @@ def test_ec_equals_oracle(spark):
     assert set(zip(got["a_id"], got["b_id"])) == set(zip(want["a_id"], want["b_id"]))
 
 
-def test_connected_components_vs_unionfind(spark):
+def test_connected_components_vs_unionfind(spark, monkeypatch):
+    from ertransfer_spark.operators import clustering
+
+    tests_run = []
+    star_test = clustering._is_star_forest
+    monkeypatch.setattr(clustering, "_is_star_forest", lambda e: tests_run.append(1) or star_test(e))
     rng = random.Random(3)
-    pairs = pd.DataFrame(
-        [(f"a{rng.randrange(50)}", f"b{rng.randrange(50)}") for _ in range(120)],
-        columns=["a_id", "b_id"],
-    ).drop_duplicates()
-    got = clusters_from_pairs(spark.createDataFrame(pairs)).toPandas()
-    want = oracle.connected_components(pairs)
-    got_map = dict(zip(got["node"], got["cluster_id"]))
-    assert got_map == want
+    random_pairs = [(f"a{rng.randrange(50)}", f"b{rng.randrange(50)}") for _ in range(120)]
+    cases = {
+        "random": random_pairs,
+        # a 1-1 matching (what UMC emits) is already a star forest
+        "one_to_one": [(f"a{i}", f"b{(i * 7) % 30}") for i in range(30)],
+        # already a single star centred on its minimum node a#a1
+        "star": [("a1", f"b{i}") for i in range(12)],
+        # a path a0-b0-a1-b1-...: the longest-diameter component
+        "path": [(f"a{i}", f"b{i}") for i in range(25)]
+        + [(f"a{i + 1}", f"b{i}") for i in range(24)],
+    }
+    for name, rows in cases.items():
+        pairs = pd.DataFrame(rows, columns=["a_id", "b_id"]).drop_duplicates()
+        tests_run.clear()
+        cc = clusters_from_pairs(spark.createDataFrame(pairs))
+        if name in ("one_to_one", "star"):
+            assert len(tests_run) == 1, name  # converged before any round
+        got = cc.toPandas()
+        want = oracle.connected_components(pairs)
+        got_map = dict(zip(got["node"], got["cluster_id"]))
+        assert got_map == want, name
+        assert len(got) == len(want), name  # one row per node
     # transitivity + min-id label invariant comes from the oracle structure
 
 
@@ -186,3 +205,16 @@ def test_pairwise_metrics(spark):
     gold = spark.createDataFrame(pd.DataFrame([("a1", "b1"), ("a3", "b3")], columns=["a_conv_id", "b_conv_id"]))
     m = pairwise_metrics(acc, gold)
     assert m["precision"] == 0.5 and m["recall"] == 0.5 and abs(m["f1"] - 0.5) < 1e-12
+
+    # duplicate pairs on either side count once
+    dup_acc = spark.createDataFrame(pd.DataFrame(
+        [("a1", "b1"), ("a1", "b1"), ("a2", "b9"), ("a2", "b9"), ("a2", "b9")], columns=["a_id", "b_id"]))
+    dup_gold = spark.createDataFrame(pd.DataFrame(
+        [("a1", "b1"), ("a3", "b3"), ("a3", "b3")], columns=["a_conv_id", "b_conv_id"]))
+    assert pairwise_metrics(dup_acc, dup_gold) == {
+        "precision": 0.5, "recall": 0.5, "f1": 0.5, "tp": 1, "n_accepted": 2, "n_golden": 2}
+
+    # an empty accepted set scores zero without dividing by zero
+    empty = acc.limit(0)
+    assert pairwise_metrics(empty, gold) == {
+        "precision": 0.0, "recall": 0.0, "f1": 0.0, "tp": 0, "n_accepted": 0, "n_golden": 2}

@@ -323,3 +323,30 @@ def test_neardup_zero_norm_guard(spark):
     # ivf (both variants) with a zero-norm corpus vector must not throw
     for method in ("kmeans", "seeded"):
         ivf_topk(vs, vs, k=2, n_lists=2, n_probe=2, method=method).collect()
+
+
+def test_string_ids_raise_type_error(spark, docs, vectors, count_jobs):
+    """The operators that key on 64-bit ids refuse string conv_ids with a
+    TypeError naming the column (a cast to long would null them and return
+    zero rows), checked on the schema without running a job; integral ids
+    of any width pass."""
+    from ertransfer_spark.functions.text import word_shingles
+    from ertransfer_spark.operators.dedup import minhash_dedup, shingle_jaccard_pairs
+    from ertransfer_spark.operators.simsearch import brute_force_topk
+
+    str_docs = docs.select(F.concat(F.lit("conv-"), "doc_id").alias("conv_id"), "text")
+    grams = str_docs.select("conv_id", word_shingles("text", n=2).alias("s")).withColumn("sz", F.size("s"))
+    str_vecs = vectors.select(F.col("vec_id").cast("string").alias("conv_id"), "embedding")
+    calls = [
+        lambda: shingle_jaccard_pairs(grams, id_col="conv_id"),
+        lambda: minhash_dedup(str_docs, id_col="conv_id"),
+        lambda: brute_force_topk(str_vecs, str_vecs, id_col="conv_id"),
+    ]
+    with count_jobs() as jobs:
+        for call in calls:
+            with pytest.raises(TypeError, match="'conv_id'"):
+                call()
+    assert jobs() == 0
+
+    int_vecs = vectors.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
+    assert brute_force_topk(int_vecs, int_vecs, k=3).count() == 3 * vectors.count()

@@ -145,3 +145,42 @@ def test_pipeline_local_train_cap_keeps_positives(spark, spark_corpora, workdir)
     )
     out = pipe.run(ta, tb, matches)
     assert out["metrics"]["f1"] >= 0.99
+
+
+def test_lineage_counts_are_committed_rows(spark, spark_corpora, workdir):
+    """Each stage's lineage ``candidate_count`` is the number of rows its
+    snapshot holds (the ``candidates`` stage logs per-block rows instead),
+    and ``labeled`` ``matches`` is sum(label) over its snapshot."""
+    from pyspark.sql import functions as F
+
+    ta, tb, matches = spark_corpora
+    pipe = ERPipeline(spark, workdir, PipelineConfig(k=5))
+    pipe.run(ta, tb, matches)
+    lin = pipe.catalog.lineage().toPandas()
+    for stage in ["records_a", "records_b", "labeled", "predictions", "matched_pairs", "clusters"]:
+        rows = lin[lin["stage"] == stage]
+        assert len(rows) == 1, stage
+        assert int(rows["candidate_count"].iloc[0]) == pipe.catalog.read(stage).count(), stage
+    labeled = pipe.catalog.read("labeled")
+    n_pos = labeled.agg(F.sum("label")).collect()[0][0]
+    assert int(lin[lin["stage"] == "labeled"]["matches"].iloc[0]) == n_pos > 0
+    assert (lin[lin["stage"] == "candidates"]["block_key"] != "").all()
+
+
+PIPELINE_JOB_CEILING = 53
+
+
+def test_pipeline_job_count_ceiling(spark, spark_corpora, workdir, count_jobs):
+    """Guard against driver round-trip regressions: a full run's Spark job
+    count on the 60-conversation fixture may not grow past the measured
+    ceiling. The count was 99 before each stage's plan ran only once
+    (pre-commit lineage counts, schema-inferring catalog reads, a second
+    featurization, fingerprint-tested connected components, three-count
+    pairwise metrics) and 53 after. A new count(), a schemaless read or a
+    recomputed stage plan each add jobs; lower the ceiling when a change
+    removes some."""
+    ta, tb, matches = spark_corpora
+    with count_jobs() as jobs:
+        out = ERPipeline(spark, workdir, PipelineConfig(k=5)).run(ta, tb, matches)
+    assert out["metrics"]["f1"] >= 0.99
+    assert jobs() <= PIPELINE_JOB_CEILING, jobs()

@@ -137,3 +137,24 @@ def test_local_fit_deterministic(spark):
     m1 = train_matcher_local(df, feature_cols=["f1", "f2"])
     m2 = train_matcher_local(df, feature_cols=["f1", "f2"])
     assert m1.weights == m2.weights and m1.intercept == m2.intercept
+
+
+def test_local_fit_partition_layout_invariant(spark):
+    """The IRLS fit sorts the collected rows by (a_id, b_id), so the same
+    rows give bit-identical coefficients whatever partition layout the
+    plan above them leaves."""
+    import random
+
+    from ertransfer_spark.operators.matcher import train_matcher_local
+
+    rng = random.Random(17)
+    rows = []
+    for i in range(600):
+        label = rng.random() < 0.3
+        rows.append((f"a{i}", f"b{rng.randrange(10**6)}",
+                     rng.gauss(0.7 if label else 0.3, 0.2), rng.random(), int(label)))
+    df = spark.createDataFrame(rows, ["a_id", "b_id", "f1", "f2", "label"])
+    base = train_matcher_local(df, feature_cols=["f1", "f2"])
+    for layout in (df.repartition(7), df.orderBy(F.desc("f1"))):
+        m = train_matcher_local(layout, feature_cols=["f1", "f2"])
+        assert m.weights == base.weights and m.intercept == base.intercept
